@@ -11,14 +11,15 @@ graphs and on real clusters alike, the round count — not per-round
 volume — is the cost driver, so halving rounds beats shaving a round's
 width.
 
-Convergence is detected by the monotone invariant: labels only ever
-decrease (every update is a MIN), so Σlabel strictly decreases until
-the fixed point — one cheap scalar agg per round on the checkpointed
-labels, instead of a join-and-count against the previous round.
-
-Lineage is truncated with ``localCheckpoint`` every round so the plan
-stays O(1) deep (on a cluster use ``checkpoint`` with a checkpoint dir
-for fault tolerance). The fixed point is the same min-label state:
+Per-round state is the (node, label) table alone — O(nodes), never
+the edge list, which is symmetrized and materialized once. Each round
+materializes that table with ``localCheckpoint``, so the plan stays
+O(1) deep (on a cluster use ``checkpoint`` with a checkpoint dir for
+fault tolerance), and the same job computes the convergence test:
+labels only ever decrease (every update is a MIN), so Σlabel strictly
+decreases until the fixed point, and Σlabel is an ``observe`` metric
+of the checkpoint job — no second job per round, no join-and-count
+against the previous round. The fixed point is the same min-label state:
 ``component`` = minimum node id reachable, matching the recursive-CTE
 oracle in plans/llm.py:l16_dedup_clusters.
 """
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -49,21 +50,26 @@ def connected_components(
         .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
         .localCheckpoint()
     )
-    nodes = sym.select(F.col("s").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-
+    labels = None
     prev_sum = None
     for _ in range(max_iterations):
-        nbr_min = (
-            sym.join(labels, sym.d == labels.node)
-            .select(F.col("s").alias("node"), "label")
-        )
-        new_labels = (
-            labels.select("node", "label")
-            .union(nbr_min)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
+        if labels is None:
+            # Round 1 reads no label table: every label starts as its
+            # own node id, so a node's neighbour minimum is min(d).
+            new_labels = sym.groupBy("s").agg(
+                F.least(F.col("s"), F.min("d")).alias("label")
+            ).select(F.col("s").alias("node"), "label")
+        else:
+            nbr_min = (
+                sym.join(labels, sym.d == labels.node)
+                .select(F.col("s").alias("node"), "label")
+            )
+            new_labels = (
+                labels.select("node", "label")
+                .union(nbr_min)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            )
         # Pointer jump: label ← min(label, label[label]). Every label is
         # itself a node id (min over node ids, by induction), so the
         # self-join is total.
@@ -73,8 +79,9 @@ def connected_components(
             ),
             F.col("label") == F.col("__pn"),
         ).select("node", F.least("label", "__pl").alias("label"))
-        labels = jumped.localCheckpoint()
-        label_sum = labels.agg(F.sum("label")).collect()[0][0]
+        obs = Observation()
+        labels = jumped.observe(obs, F.sum("label").alias("s")).localCheckpoint()
+        label_sum = obs.get["s"]
         if label_sum == prev_sum:
             break
         prev_sum = label_sum

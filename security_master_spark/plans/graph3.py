@@ -8,7 +8,7 @@ Driver-certified via the round-8 window (registry.ROUND8_HEAD).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -81,14 +81,28 @@ def g6_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     same unrolled rounds the oracle runs, so the hash certifies every
     intermediate degree computation; a fixpoint test asserts a 5th
     round changes nothing at sf0.001/0.01, where the bounded peel IS
-    the true k-core. Shape: each round is one degree groupBy plus two
-    semi-join-shaped equi-joins against the kept-node set — all on
-    the same src/dst keys, so a cluster that hash-partitions edges
-    once reuses the partitioning across every round; peeling is
-    monotone (edge set only shrinks), and the distinct-pair collapse
-    happens before any iteration."""
+    the true k-core.
+
+    Shape: the loop carries only the kept-NODE set, never an edge
+    list. Peeling is monotone — a node with degree ≥ k in round i's
+    edge set has an edge there, so it was kept in round i−1 — hence
+    keep_i ⊆ keep_{i−1} and, by induction, the oracle's edges_i is
+    exactly the distinct pairs with BOTH ends in keep_i. Each round
+    is therefore two broadcast semi-joins of the pairs against the
+    previous keep set, one explode → groupBy degree count, and a
+    ≤ #nodes materialization, whose job also observes the round's
+    minimum degree: once that is ≥ k nothing was peeled, the edge set
+    is a fixpoint, and the remaining rounds (which would repeat it)
+    are skipped."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
+    # Loop-invariant base: the distinct (customer, supplier) pairs,
+    # materialized once so no round re-derives lineitem ⋈ orders.
+    # Customer ids are even and supplier ids odd, so one node column
+    # (and one keep set) covers both sides. localCheckpoint keeps
+    # row-count stats (a persisted InMemoryRelation lost them and every
+    # join fell back to sort-merge) but is non-replicated executor
+    # storage: a run on unreliable nodes swaps in reliable checkpoint.
     pairs = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
@@ -96,46 +110,47 @@ def g6_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_suppkey") * 2 + 1).alias("s"),
         )
         .distinct()
-    )
-    # Loop-invariant materialization — localCheckpoint, the l16
-    # (connected-components) per-round pattern: cuts lineage like the
-    # round-8 parquet-scratch spelling did but without 5 disk
-    # encode/decode roundtrips (round-15 measurement: 3.07 → 2.46 s
-    # isolated at sf0.1). The alternatives stay measured-worse: raw
-    # lineage re-derives the lineitem⋈orders distinct ~12× (9-19 s at
-    # sf0.01), and .persist() was 10× worse still (96 s) because the
-    # cached InMemoryRelation loses size stats and every keep-join
-    # fell back from broadcast to sort-merge — localCheckpoint's
-    # LogicalRDD instead lets AQE pick the join strategy from RUNTIME
-    # shuffle sizes each round. Caveat, same as l16: localCheckpoint
-    # is non-replicated executor storage (lineage is truncated, an
-    # executor loss fails the job); a 100 TB run on unreliable nodes
-    # swaps in reliable checkpoint / the scratch-parquet spelling —
-    # one line, same shape.
-    edges = (
-        pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionAll(
-            pairs.select(
-                F.col("s").alias("src"), F.col("c").alias("dst")
-            )
-        )
         .localCheckpoint()
     )
-    for i in range(_PEEL_ROUNDS):
-        deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= _CORE_K).select("src")
-        nxt = edges.join(keep, "src").join(
-            keep.withColumnRenamed("src", "dst"), "dst"
+
+    def degrees(keep):
+        live = pairs
+        if keep is not None:
+            live = live.join(
+                F.broadcast(keep.select(F.col("node").alias("c"))),
+                "c",
+                "left_semi",
+            ).join(
+                F.broadcast(keep.select(F.col("node").alias("s"))),
+                "s",
+                "left_semi",
+            )
+        return (
+            live.select(F.explode(F.array("c", "s")).alias("node"))
+            .groupBy("node")
+            .agg(F.count("*").alias("d"))
         )
-        # Materialize every round, not just the base: round N's keep
-        # set re-derives round N−1's edges, so an unmaterialized loop
-        # re-executes all prior rounds multiple times each (the DAG
-        # grows multiplicatively — the classic iterative-lineage trap;
-        # same discipline as the base materialization above).
-        edges = nxt.localCheckpoint()
-    core_deg = edges.groupBy("src").agg(F.count("*").alias("d"))
+
+    keep = None
+    for _ in range(_PEEL_ROUNDS):
+        # The checkpoint also cuts the lineage, so round N never
+        # re-runs rounds 1..N−1. At the fixpoint the kept degrees ARE
+        # the core's.
+        obs = Observation()
+        keep = (
+            degrees(keep)
+            .observe(obs, F.min("d").alias("min_d"))
+            .filter(F.col("d") >= _CORE_K)
+            .localCheckpoint()
+        )
+        min_d = obs.get["min_d"]
+        if min_d is None or min_d >= _CORE_K:
+            core_deg = keep
+            break
+    else:
+        core_deg = degrees(keep)
     return core_deg.groupBy(
-        (F.col("src") % 2).cast("bigint").alias("side")
+        (F.col("node") % 2).cast("bigint").alias("side")
     ).agg(
         F.count("*").cast("bigint").alias("n_core_nodes"),
         F.sum("d").cast("bigint").alias("core_degree_sum"),

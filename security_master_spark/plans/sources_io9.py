@@ -46,8 +46,10 @@ def io18_dynamic_partition_overwrite(
     The oracle derives the expected post-backfill state from the
     source table alone (F rows doubled, others original), so the hash
     certifies both the overwrite scoping AND that no row was lost or
-    duplicated across the two writes. Conf is save/restored — the mode
-    is a session-level dial a shared platform must not leak.
+    duplicated across the two writes. The mode is set as a per-write
+    option, never through the session-wide
+    ``spark.sql.sources.partitionOverwriteMode`` conf — a shared
+    session's other writers must keep their own overwrite semantics.
 
     Scale: overwrite granularity is the partition directory — the
     backfill's cost is O(partitions rewritten), never a full-table
@@ -55,23 +57,19 @@ def io18_dynamic_partition_overwrite(
     of a years-deep date-partitioned table."""
     orders = load_table(spark, sf_dir, "orders")
     path = _scratch(sf_dir, "orders_dyn_overwrite")
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(conf)
     v1 = orders.select("o_orderkey", "o_totalprice", "o_orderstatus")
-    try:
-        # v1: full table, partitioned by status (static mode is fine —
-        # the target starts empty).
-        v1.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-        # backfill: ONLY the F partition, prices doubled — dynamic
-        # mode scopes the overwrite to partitions in this frame.
-        spark.conf.set(conf, "dynamic")
-        orders.filter(F.col("o_orderstatus") == "F").select(
-            "o_orderkey",
-            (F.col("o_totalprice") * 2).alias("o_totalprice"),
-            "o_orderstatus",
-        ).write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    finally:
-        spark.conf.set(conf, saved)
+    # v1: full table, partitioned by status (static mode is fine — the
+    # target starts empty).
+    v1.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
+    # backfill: ONLY the F partition, prices doubled — dynamic mode
+    # scopes the overwrite to partitions in this frame.
+    orders.filter(F.col("o_orderstatus") == "F").select(
+        "o_orderkey",
+        (F.col("o_totalprice") * 2).alias("o_totalprice"),
+        "o_orderstatus",
+    ).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("o_orderstatus").parquet(path)
     # Explicit schema on read-back: an EMPTY source writes zero
     # partition directories, and schema inference over a bare
     # _SUCCESS marker raises UNABLE_TO_INFER_SCHEMA — a production

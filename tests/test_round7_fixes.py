@@ -176,15 +176,12 @@ def test_schema_cache_clear_hook(tmp_path, spark):
 # ------------------------------------------------------ g6 k-core
 
 
-def test_g6_peel_reaches_fixpoint_and_core_property(spark, sf_dir):
-    """The registered g6 semantic is the 4-round peel; at the oracle
-    SFs the peel must have CONVERGED (a 5th round changes nothing),
-    making the checked result the true k-core — and every surviving
-    node's in-core degree must be >= k."""
+def g6_edges(spark, sf_dir):
+    """g6's directed edge set before any peel: both directions of every
+    distinct (customer, supplier) trade pair."""
     from pyspark.sql import functions as F
 
     from security_master_spark.datasets import load_table
-    from security_master_spark.plans.graph3 import _CORE_K, _PEEL_ROUNDS
 
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
@@ -196,19 +193,37 @@ def test_g6_peel_reaches_fixpoint_and_core_property(spark, sf_dir):
         )
         .distinct()
     )
-    edges = pairs.select(
+    return pairs.select(
         F.col("c").alias("src"), F.col("s").alias("dst")
     ).unionAll(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
 
-    def peel_once(e):
-        deg = e.groupBy("src").agg(F.count("*").alias("d"))
-        keep = deg.filter(F.col("d") >= _CORE_K).select("src")
-        return e.join(keep, "src").join(
-            keep.withColumnRenamed("src", "dst"), "dst"
-        )
 
+def peel_once(e):
+    """One k-core peel round over a directed edge set: keep the edges
+    whose two ends both have degree >= k in ``e``."""
+    from pyspark.sql import functions as F
+
+    from security_master_spark.plans.graph3 import _CORE_K
+
+    deg = e.groupBy("src").agg(F.count("*").alias("d"))
+    keep = deg.filter(F.col("d") >= _CORE_K).select("src")
+    return e.join(keep, "src").join(
+        keep.withColumnRenamed("src", "dst"), "dst"
+    )
+
+
+def test_g6_peel_reaches_fixpoint_and_core_property(spark, sf_dir):
+    """The registered g6 semantic is the 4-round peel; at the oracle
+    SFs the peel must have CONVERGED (a 5th round changes nothing),
+    making the checked result the true k-core — and every surviving
+    node's in-core degree must be >= k."""
+    from pyspark.sql import functions as F
+
+    from security_master_spark.plans.graph3 import _CORE_K, _PEEL_ROUNDS
+
+    edges = g6_edges(spark, sf_dir)
     for _ in range(_PEEL_ROUNDS):
         edges = peel_once(edges)
     n4 = edges.count()
@@ -224,3 +239,27 @@ def test_g6_peel_reaches_fixpoint_and_core_property(spark, sf_dir):
             .first()[0]
         )
         assert min_deg >= _CORE_K
+
+
+# ------------------------------------------------------- u14 total
+
+
+def test_u14_total_does_not_depend_on_row_order():
+    """u14 rounds a group total of ~30k prices (near 7.5e9 at sf0.1) to
+    4 decimals; the total must be the same whatever order the rows
+    reach the group in, as the oracle's FSUM is."""
+    import math
+
+    import pyarrow as pa
+
+    from security_master_spark.plans.udfs6 import _order_profile
+
+    rng = np.random.default_rng(7)
+    prices = np.round(rng.uniform(900.0, 500000.0, 30000), 2)
+    totals = {
+        _order_profile(
+            pa.table({"o_orderpriority": ["1-URGENT"] * len(p), "o_totalprice": p})
+        ).column("total_price")[0].as_py()
+        for p in (rng.permutation(prices) for _ in range(8))
+    }
+    assert totals == {math.fsum(prices)}
