@@ -93,7 +93,7 @@ def _nullsafe_attach(big: DataFrame, small: DataFrame,
     keys), so it costs one single-partition exchange + stage on the
     broadcast build's critical path — measured as a FLAT ~0.1-0.45 s
     per guarded attach at local[32] on the 6M-tick corpus
-    (tools/measure_attach_guard.py; a per-call constant, flat across
+    (PLANS.md "Attach-guard cost"; a per-call constant, flat across
     corpus shape and key skew — at cluster scale it is noise, at toy
     scale it is visible) — and aborts the FIRST ACTION as a
     SparkRuntimeException wrapping the message below, before the

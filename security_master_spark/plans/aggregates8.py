@@ -3,7 +3,7 @@
 deterministic spelling) and exact distinct counting via bitmap words
 (the Roaring-style distributed-distinct technique).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ aggregates — PERCENTILE_DISC / PERCENTILE_CONT with the SQL:2008
 ``WITHIN GROUP (ORDER BY ...)`` syntax (a22's LISTAGG is the string
 member of this family; these are the numeric ones).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 completeness per stream and feed staleness — the two monitoring
 queries an ingestion SLA dashboard refreshes continuously.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 duplicate detection — replayed events that exact-key screens (dq8)
 miss because the copies arrive microseconds-to-a-second apart.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 audit — are event ids monotone in event time per stream? The
 ordering contract every incremental consumer silently assumes.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

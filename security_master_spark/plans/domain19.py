@@ -3,7 +3,7 @@
 variance-covariance decomposition certified in-query, CUSUM
 changepoint detection, and lead-lag cross-correlation discovery.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 turnover from value weights, and calendar (day-of-week) effects with
 per-cell t-statistics.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ exponent via rescaled-range (R/S) analysis — the long-memory
 diagnostic (H > 0.5 trending, < 0.5 mean-reverting) that complements
 d70's variance-ratio test with the classic multi-scale spelling.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ information coefficient (IC) panel — the factor-evaluation staple
 that scores a signal by the daily cross-sectional rank correlation
 with next-day returns.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

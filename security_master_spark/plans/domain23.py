@@ -3,7 +3,7 @@ capture ratios — the asymmetric-beta scorecard (how much of the
 market's up days does this series capture vs how much of the down
 days it suffers).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

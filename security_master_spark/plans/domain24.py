@@ -2,7 +2,7 @@
 profile (volume-at-price histogram with the point of control) — the
 market-profile chart behind support/resistance analytics.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

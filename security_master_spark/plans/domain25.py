@@ -3,7 +3,7 @@ cointegration screening — hedge regression + closed-form ADF t-stat
 on the residual, the statistical backbone of every pairs-trading desk
 (d44's spread z-score ASSUMES the pair cointegrates; this tests it).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

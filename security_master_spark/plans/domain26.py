@@ -2,7 +2,7 @@
 intraday return decomposition — the close-to-open / open-to-close
 split behind every "when does the return actually accrue?" study.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 sign autocorrelation — the persistence of tick-rule trade signs at
 lags 1..5, the microstructure signature of order splitting.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

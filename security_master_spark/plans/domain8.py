@@ -57,7 +57,7 @@ def d39_var_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (same key); the customer dim broadcasts into the fact
     scan.
 
-    Plan decision (round 11, measured — tools/measure_d39_rank.py):
+    Plan decision (round 11, measured — PLANS.md "d39 rank-plan study"):
     the round-10 verdict named this query as the registry consumer
     for operators/rolling.py:distributed_row_number. The swap was
     built, hash-certified green against this unchanged oracle, and

@@ -3,7 +3,7 @@ the customer–supplier trade graph — the degeneracy decomposition that
 finds the dense trading core (and whose peel order bounds g2's
 triangle orientation).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -26,10 +26,6 @@ import os
 SCRATCH_CONF_KEY = "spark.sms.scratch.root"
 _DEFAULT_ROOT = "/tmp/sms_io"
 
-#: kept for backward compatibility with callers/tests that import it;
-#: prefer :func:`_root` which honors the conf/env override.
-_IO_ROOT = _DEFAULT_ROOT
-
 
 def _root() -> str:
     try:  # active-session conf wins — the cluster-side config point

@@ -2,7 +2,7 @@
 quality audit — the vector-store ingest gate that catches collapsed,
 blown-up, or un-normalized embeddings before they poison retrieval.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ statistics — the corpus-wide adjacent-symbol pair counts that drive
 one merge round of byte-pair-encoding tokenizer TRAINING (l15
 applies a tokenizer; this is the primitive that learns one).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -4,7 +4,7 @@ the exact Jaccard ground truth on a bounded slice, the measurement
 that turns "LSH found candidates" into "LSH has THIS
 precision/recall at THIS threshold".
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations
@@ -19,10 +19,11 @@ from security_master_spark.operators.dedup import (
     lsh_candidate_pairs,
 )
 # Cross-plan import, deliberately: the oracle must embed l7's EXACT
-# candidate-generation SQL so the two queries can never drift. Since
-# round 7 the driver window is pinned by registry.ROUND7_HEAD (the
-# dict is reordered), so the import-order splice this used to cause
-# no longer matters.
+# candidate-generation SQL so the two queries can never drift. The
+# import registers llm's queries ahead of their slot in the registry's
+# import list. The driver window is pinned by registry.ROUND15_HEAD
+# (the dict is reordered), so this splice moves no name in the first
+# 50; it is part of the order of the names after them.
 from security_master_spark.plans.llm import _minhash_oracle_sql
 from security_master_spark.plans.registry import register
 

@@ -3,7 +3,7 @@ ViT-style decode → patch-grid → per-patch-statistics pipeline, with
 the tile grid (including PARTIAL edge tiles) certified closed-form by
 the oracle.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 overlapping-frame energy grid (STFT/VAD front end), the audio twin of
 m7's image tiling, oracle-certified frame by frame.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ set operations — INTERSECT ALL / EXCEPT ALL, the duplicate-preserving
 semantics q8's set-flavored ops cannot express — and multi-column
 (row-value) IN subqueries.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

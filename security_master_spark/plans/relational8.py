@@ -2,7 +2,7 @@
 EXISTS null trap — three-valued-logic semantics certified side by
 side on a NULL-bearing subquery.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

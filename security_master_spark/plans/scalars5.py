@@ -2,7 +2,7 @@
 base64, hex, codepoint functions, byte lengths, and the
 encode→base64→decode roundtrip proved in-row.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

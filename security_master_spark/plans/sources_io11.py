@@ -2,7 +2,7 @@
 containing embedded newlines and quotes surviving a write→read
 roundtrip (`multiLine`), the classic real-world CSV hazard.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ array-of-struct documents (an order with its line items) surviving
 write → schema-first read → re-flatten, the denormalized-document
 interchange shape io2's flat JSON never exercises.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ tab separator, custom NULL sentinel, and a custom escape character
 surviving a write→read roundtrip; the "other CSV dialect" every
 real-world ingest eventually meets.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ two generations of files with DIFFERENT schemas in one dataset,
 unified by ``mergeSchema`` (io7 evolves the declared read schema;
 this exercises footer-level union across heterogeneous files).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

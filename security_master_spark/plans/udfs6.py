@@ -2,7 +2,7 @@
 Arrow-native grouped-map (the pandas-free sibling of u4's
 applyInPandas), running pyarrow.compute C++ kernels per group.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ WINDOW function over a bounded rolling frame — the custom-rolling-
 statistic surface (u3 covers grouped-agg; this is the same UDAF
 family evaluated per sliding frame).
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

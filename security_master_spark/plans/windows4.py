@@ -2,7 +2,7 @@
 detection — the canonical "consecutive runs" window idiom that no
 frame clause can express directly.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

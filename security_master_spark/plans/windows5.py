@@ -2,7 +2,7 @@
 share-of-total window (Oracle's RATIO_TO_REPORT), spelled as a
 windowed sum division with multi-level shares in one pass.
 
-Driver-certified via the round-8 window (registry.ROUND8_HEAD).
+Driver-certified via the round-8 window (CORRECTNESS_r08.json).
 """
 
 from __future__ import annotations

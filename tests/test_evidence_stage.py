@@ -7,10 +7,8 @@ reproduce the standing rules rounds 10-12 applied by hand:
 - backfill = next-oldest hash-GREENS only, topping the window up to
   its size — a row whose latest evidence is weak (``no_oracle``)
   never backfills and rotates with its own round's main body;
-- while the newest committed artifact is CORRECTNESS_r11, the staged
-  window is byte-for-byte the hand-derived ROUND12_HEAD (the pin the
-  round-11 verdict ordered). Once r12+ artifacts land this exactness
-  clause retires and the structural clauses keep guarding the rules.
+- declared queue-jumpers lead the window, and the tail is trimmed to
+  keep its size.
 
 No Spark session needed — the stager reads committed JSON and the
 registry's name list.
@@ -60,41 +58,6 @@ def test_stage_window_follows_the_standing_rules():
     assert len(set(main) | set(backfill)) == 50
 
 
-def test_stage_reproduces_round12_head_while_r11_is_newest():
-    tool = _load_tool()
-    from security_master_spark.plans.registry import ROUND12_HEAD, queries
-
-    rows = tool.latest_rows()
-    newest = max(rnd for rnd, _r in rows.values())
-    if newest != 11:
-        return  # exactness clause retired; structural test still runs
-    main, backfill, _ = tool.stage_window(list(queries()), rows, 50)
-    assert tuple(main + backfill) == ROUND12_HEAD
-
-
-def test_stage_reproduces_round13_head_while_r12_is_newest():
-    """While CORRECTNESS_r12 is the newest committed artifact, the
-    stager run with the declared ROUND13_QUEUE_JUMPERS must reproduce
-    the pinned ROUND13_HEAD byte-for-byte (the round-13 window was
-    pasted from its output). Retires once r13+ artifacts land; the
-    structural clauses above keep guarding the rules."""
-    tool = _load_tool()
-    from security_master_spark.plans.registry import (
-        ROUND13_HEAD,
-        ROUND13_QUEUE_JUMPERS,
-        queries,
-    )
-
-    rows = tool.latest_rows()
-    newest = max(rnd for rnd, _r in rows.values())
-    if newest != 12:
-        return  # exactness clause retired
-    jump, main, back, _ = tool.stage_with_jumpers(
-        list(queries()), rows, 50, ROUND13_QUEUE_JUMPERS
-    )
-    assert tuple(jump + main + back) == ROUND13_HEAD
-
-
 def test_stage_with_jumpers_front_loads_and_trims():
     tool = _load_tool()
     from security_master_spark.plans.registry import queries
@@ -135,63 +98,3 @@ def test_stage_with_jumpers_rejects_unknown_names():
         assert "nope_q" in str(e)
     else:
         raise AssertionError("unknown jumper did not raise")
-
-
-def test_stage_reproduces_round14_head_while_r13_is_newest():
-    """While CORRECTNESS_r13 is the newest committed artifact, the
-    plain stager (no queue-jumpers: round 13 changed no registered
-    plan text) must reproduce the pinned ROUND14_HEAD byte-for-byte
-    (the round-14 window was pasted from its output). Retires once
-    r14+ artifacts land; the structural clauses above keep guarding
-    the rules."""
-    tool = _load_tool()
-    from security_master_spark.plans.registry import ROUND14_HEAD, queries
-
-    rows = tool.latest_rows()
-    newest = max(rnd for rnd, _r in rows.values())
-    if newest != 13:
-        return  # exactness clause retired
-    main, backfill, _ = tool.stage_window(list(queries()), rows, 50)
-    assert tuple(main + backfill) == ROUND14_HEAD
-
-
-def test_stage_reproduces_round15_head_while_r14_is_newest():
-    """While CORRECTNESS_r14 is the newest committed artifact, the
-    plain stager (no queue-jumpers: rounds 13-14 changed no registered
-    plan text) must reproduce the pinned ROUND15_HEAD byte-for-byte
-    (the round-15 window was pasted from its output). Retires once
-    r15+ artifacts land; the structural clauses above keep guarding
-    the rules."""
-    tool = _load_tool()
-    from security_master_spark.plans.registry import ROUND15_HEAD, queries
-
-    rows = tool.latest_rows()
-    newest = max(rnd for rnd, _r in rows.values())
-    if newest != 14:
-        return  # exactness clause retired
-    main, backfill, _ = tool.stage_window(list(queries()), rows, 50)
-    assert tuple(main + backfill) == ROUND15_HEAD
-
-
-def test_round13_jumpers_are_declared_and_registered():
-    # the four plans whose forced broadcasts were dropped in round 12
-    # (PLANS.md broadcast-site audit) must be declared for round 13 —
-    # and every declared name must resolve in the registry
-    from security_master_spark.plans.registry import (
-        ROUND12_HEAD,
-        ROUND13_QUEUE_JUMPERS,
-        queries,
-    )
-
-    assert set(ROUND13_QUEUE_JUMPERS) == {
-        "w13_ratio_to_report",
-        "d47_basket_lift",
-        "d49_fulfillment_sla",
-        "g4_link_prediction",
-        "l22_distinctive_terms",
-        "l29_unigram_surprisal",
-    }
-    assert set(ROUND13_QUEUE_JUMPERS) <= set(queries())
-    # the three audit queries NOT declared are covered by ROUND12_HEAD
-    for n in ("dq4_ks_test", "d39_var_es", "d40_hhi_concentration"):
-        assert n in ROUND12_HEAD

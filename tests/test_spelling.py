@@ -259,7 +259,7 @@ def test_probe_scratch_key_name_raises(spark):
 
 
 def test_round13_measured_thresholds():
-    # round-13 mid-skew arms (tools/measure_mid_skew.py, PLANS.md):
+    # round-13 mid-skew arms (PLANS.md "Mid-skew arms"):
     # carry/trailing crossover measured AT ~0.5; the rank family's
     # window form still wins at the 0.7 arm, so its per-operator
     # threshold is the (0.70, 0.96) bracket midpoint

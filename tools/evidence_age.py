@@ -1,7 +1,7 @@
 """Evidence-age ledger: for every registered query, the latest
 CORRECTNESS_r*.json round that carries a row for it — the input to
-the evidence-freshness rotation (ROUND{8,9,10}_HEAD in
-plans/registry.py). Prints the histogram and the oldest-first
+the evidence-freshness rotation (the driver window pinned as
+ROUND15_HEAD in plans/registry.py). Prints the histogram and the oldest-first
 candidate list the next head pin should be built from.
 
 Usage: python tools/evidence_age.py [--max-round N] [--limit K] [--check]

@@ -7,11 +7,11 @@ Two jobs, one tool:
    with the ``explain("formatted")`` output for every named query —
    the committed plan evidence the optimization judge checks claims
    against (plans/r15/<q>_before.txt / _after.txt).
-2. Without ``--no-time``, times each named query with the bench.py
-   methodology (warm-up, noop sink, inter-query System.gc, N
-   interleaved passes, report the minimum) in THIS process — run the
-   tool once per measurement so every invocation is a fresh JVM, the
-   bench_audit.py isolation discipline.
+2. Without ``--no-time``, times each named query with bench.py's own
+   ``warm_up`` and ``min_timings`` (noop sink, inter-query System.gc
+   and clearCache, N interleaved passes, report the minimum) in THIS
+   process — run the tool once per measurement so every invocation is
+   a fresh JVM.
 
 Usage:
     python tools/opt_probe.py --explain plans/r15 --suffix before \
@@ -26,7 +26,6 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -73,6 +72,7 @@ def main(argv: list[str]) -> None:
         sys.exit("usage: opt_probe.py [--explain DIR] [--suffix S] "
                  "[--passes N] [--no-time] query ...")
 
+    from bench import min_timings, warm_up
     from security_master_spark.plans import registry
     from security_master_spark.session import get_spark
 
@@ -125,36 +125,12 @@ def main(argv: list[str]) -> None:
     if not do_time:
         return
 
-    # Warm-up identical to bench.py: JVM + parquet footers + the
-    # Python-worker pool, so the first timed query isn't billed
-    # one-time startup.
-    qs["q1_pricing_summary"](spark, sf_dir).count()
-    spark.range(0, 1000, numPartitions=32).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
-
+    warm_up(spark, qs, sf_dir)
     # The explain phase above registers (lazy) cache entries while
     # constructing persist-carrying plans; start the timed passes from
     # an empty cache.
     spark.catalog.clearCache()
-    timings: dict[str, float] = {}
-    for _p in range(passes):
-        for n in names:
-            spark.sparkContext.setJobDescription(f"opt_probe:{n}")
-            t0 = time.perf_counter()
-            df = qs[n](spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            el = round(time.perf_counter() - t0, 4)
-            if n not in timings or el < timings[n]:
-                timings[n] = el
-            spark.sparkContext.setJobDescription(None)
-            spark.sparkContext._jvm.System.gc()
-            # Match bench.py's round-15 measurement fix: drop cached
-            # frames between timed queries so a persist-carrying plan
-            # pays its own materialization every pass (CacheManager
-            # substitutes by canonicalized plan, so pass 2 would
-            # otherwise read pass 1's cache and report a warm number).
-            spark.catalog.clearCache()
+    timings = min_timings(spark, qs, names, sf_dir, passes)
     print(json.dumps({"sf": sf_dir, "passes": passes, "min": timings},
                      sort_keys=True))
 

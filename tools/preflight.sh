@@ -20,6 +20,12 @@ set -e
 cd "$(dirname "$0")/.."
 REPO="$(pwd)"
 
+# The tier-1 environment (ROADMAP.md): one Spark core per host CPU, not
+# the engine's local[32] default, and an explicit Spark scratch dir.
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
+SPARK_LOCAL_DIRS="${SPARK_LOCAL_DIRS:-/tmp/spark-local}"
+export SPARK_GRAFT_CPUS SPARK_LOCAL_DIRS
+
 ADV=0
 if [ "$1" = "--adversarial" ]; then
     ADV=1
